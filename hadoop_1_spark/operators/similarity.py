@@ -254,10 +254,45 @@ def _cosine(qv: Column, cv: Column, qn: Column, cn: Column) -> Column:
     return F.round(DOT_FOLD(qv, cv) / (qn * cn), 9)
 
 
+def _query_side(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *extra: Column,
+    norm: Column | None = None,
+) -> DataFrame:
+    """(query_id, qv, qn[, extra...]): the query half of every cosine
+    scan. The norm stays expression-form — the side is tiny and feeds a
+    broadcast build; pass ``norm`` to reuse an already-built fold (each
+    build is a few dozen py4j round-trips)."""
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        (_norm(F.col(vec_col)) if norm is None else norm).alias("qn"),
+        *extra,
+    )
+
+
+def _corpus_side(
+    corpus: DataFrame, id_col: str, vec_col: str, norm: Column, *extra: Column
+) -> DataFrame:
+    """(neighbor_id, cv, cn[, extra...]): the corpus half, with the norm
+    the caller already has (Arrow NORM, a parked column, or the fold)."""
+    return corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+        norm.alias("cn"),
+        *extra,
+    )
+
+
 def _score(q: DataFrame, c: DataFrame, extra_cond=None) -> DataFrame:
+    """Pair join + cosine, self-pairs excluded. ``extra_cond`` — the
+    bucket/cell equality of the partitioned scans — leads the
+    conjunction."""
     cond = q["query_id"] != c["neighbor_id"]
     if extra_cond is not None:
-        cond = cond & extra_cond
+        cond = extra_cond & cond
     return q.join(c, cond).select(
         "query_id",
         "neighbor_id",
@@ -274,21 +309,29 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast the query set, score the full
     corpus, per-query window rank. Ties broken by neighbor_id asc."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-        )
-    )
-    # corpus side: Arrow norm (bit-identical to the fold; the query side
-    # stays expression-form — it is tiny and feeds a broadcast build)
-    c = emb.select(
+    q = F.broadcast(_query_side(queries, id_col, vec_col))
+    # corpus side: Arrow norm (bit-identical to the fold)
+    c = _corpus_side(emb, id_col, vec_col, NORM(F.col(vec_col)))
+    return _topk(_score(q, c), k)
+
+
+def _lsh_corpus_side(
+    emb: DataFrame, signs: list[list[int]], id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, cv, cn, cb): one Arrow pass computes the norm + all
+    hyperplane sums (bit-identical fast twin of _norm +
+    signed_sums_fused); the bucket bits are cut from the sums in a
+    separate select so the fold evaluates once."""
+    return emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        NORM(F.col(vec_col)).alias("cn"),
+        project_udf(signs)(F.col(vec_col)).alias("_p"),
+    ).select(
+        "neighbor_id",
+        "cv",
+        F.col("_p.nrm").alias("cn"),
+        bucket_from_sums("_p.sums", 0, len(signs)).alias("cb"),
     )
-    return _topk(_score(q, c), k)
 
 
 def lsh_ann_topk(
@@ -303,32 +346,11 @@ def lsh_ann_topk(
     """LSH-bucketed ANN: score only corpus vectors in the query's bucket.
     nbits tunes recall/cost: scored set shrinks ~2^nbits-fold."""
     signs = hyperplane_signs(nbits, seed=seed)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), signs).alias("qb"),
-        )
-    )
-    # corpus side: one Arrow pass computes norm + all nbits hyperplane sums
-    # (bit-identical fast twin of _norm + signed_sums_fused)
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        project_udf(signs)(F.col(vec_col)).alias("_p"),
-    ).select(
-        "neighbor_id",
-        "cv",
-        F.col("_p.nrm").alias("cn"),
-        bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
-    )
-    scored = q.join(c, (q["qb"] == c["cb"]) & (q["query_id"] != c["neighbor_id"])).select(
-        "query_id",
-        "neighbor_id",
-        _cosine(q["qv"], c["cv"], q["qn"], c["cn"]).alias("cosine"),
-    )
-    return _topk(scored, k)
+    q = F.broadcast(_query_side(
+        queries, id_col, vec_col, bucket_expr(F.col(vec_col), signs).alias("qb")
+    ))
+    c = _lsh_corpus_side(emb, signs, id_col, vec_col)
+    return _topk(_score(q, c, q["qb"] == c["cb"]), k)
 
 
 def lsh_park(
@@ -392,28 +414,15 @@ def lsh_topk_scan(
     recomputed. Scan cost is the probed buckets (~|corpus| / 2^nbits
     per query), never the corpus — and unlike lsh_ann_topk, ZERO
     signature compute on the corpus side at query time."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), hyperplane_signs(nbits, seed=seed)).alias("qb"),
-        )
+    signs = hyperplane_signs(nbits, seed=seed)
+    q = F.broadcast(_query_side(
+        queries, id_col, vec_col, bucket_expr(F.col(vec_col), signs).alias("qb")
+    ))
+    c = _corpus_side(
+        queries.sparkSession.read.parquet(f"{path}/buckets"), id_col, vec_col,
+        F.col("nrm"), F.col("bucket").cast("int").alias("cb"),
     )
-    c = queries.sparkSession.read.parquet(f"{path}/buckets").select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("bucket").cast("int").alias("cb"),
-    )
-    scored = q.join(
-        c, (q["qb"] == c["cb"]) & (q["query_id"] != c["neighbor_id"])
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _cosine(q["qv"], c["cv"], q["qn"], c["cn"]).alias("cosine"),
-    )
-    return _topk(scored, k)
+    return _topk(_score(q, c, q["qb"] == c["cb"]), k)
 
 
 def ivf_topk(
@@ -427,28 +436,13 @@ def ivf_topk(
     """IVF-style probe: score only the query's coarse cell (here the
     pre-assigned `label`; a real deployment trains centroids offline and
     partitions the corpus by cell for partition-pruned probes)."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            F.col(cell_col).alias("qcell"),
-        )
+    q = F.broadcast(_query_side(
+        queries, id_col, vec_col, F.col(cell_col).alias("qcell")
+    ))
+    c = _corpus_side(
+        emb, id_col, vec_col, NORM(F.col(vec_col)), F.col(cell_col).alias("ccell")
     )
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        NORM(F.col(vec_col)).alias("cn"),
-        F.col(cell_col).alias("ccell"),
-    )
-    scored = q.join(
-        c, (q["qcell"] == c["ccell"]) & (q["query_id"] != c["neighbor_id"])
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _cosine(q["qv"], c["cv"], q["qn"], c["cn"]).alias("cosine"),
-    )
-    return _topk(scored, k)
+    return _topk(_score(q, c, q["qcell"] == c["ccell"]), k)
 
 
 def l2_chain(a: Column, b: Column) -> Column:
@@ -858,28 +852,15 @@ def _exact_rerank(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """The exact-rerank contract shared by every two-stage ANN
-    (quantized_topk, pq_adc_topk): join the (query_id, neighbor_id)
-    shortlist back to full vectors, score with the fixed-order dot fold
-    + round-9 cosine, cut to top-k with the (cosine DESC, neighbor ASC)
-    tie-break. ONE implementation so the rerank discipline can never
-    diverge between operators.
-
-    Sizing the shortlist (the ``rerank`` parameter upstream): the
-    round-12 recall frontier (SCALE.md) measured quantized-tier recall
-    as SHORTLIST-bound, not probe-bound — rerank 20 -> 50 roughly
-    doubles PQ recall and adds ~50% to BQ, while extra nprobe without a
-    wider shortlist buys almost nothing. Deploy quantized tiers at
-    rerank=50 (the measured default; sim_pq_topk_scan_r50 prices it);
-    the cost is linear in |queries| x rerank float-row reads, which
-    stays negligible next to the code scan at any corpus size."""
+    """The exact-rerank contract shared by every two-stage ANN: join the
+    (query_id, neighbor_id) shortlist back to full vectors, score with
+    the fixed-order dot fold + round-9 cosine, cut to top-k with the
+    (cosine DESC, neighbor ASC) tie-break. ONE implementation so the
+    rerank discipline can never diverge between operators; the
+    shortlist itself comes from _shortlist_rerank."""
     nrm = _norm(F.col(vec_col))
-    qside = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), nrm.alias("qn")
-    )
-    cside = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), nrm.alias("cn")
-    )
+    qside = _query_side(queries, id_col, vec_col, norm=nrm)
+    cside = _corpus_side(corpus, id_col, vec_col, nrm)
     rer = (
         short.join(F.broadcast(qside), "query_id")
         .join(cside, "neighbor_id")
@@ -894,6 +875,47 @@ def _exact_rerank(
         )
     )
     return _topk(rer, k)
+
+
+def _shortlist_rerank(
+    cand: DataFrame,
+    score: str,
+    ascending: bool,
+    rerank: int,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The candidate stage every quantized tier ends with: rank each
+    query's (query_id, neighbor_id, ``score``) candidates by the code
+    score in its direction (ties: neighbor ASC), keep the first
+    ``rerank``, and exact-rerank the survivors (_exact_rerank).
+
+    Fails closed: a candidate whose score is NULL — a parked code with
+    no codebook entry, i.e. codes and codebooks out of step — ranks last
+    and never enters the shortlist. The NULL test sits in the cut, not
+    before the window: a pre-window IS NOT NULL lets Spark infer and
+    push null checks on the code columns below the Python projection of
+    an inline-trained scan, which then evaluates its Arrow UDF twice.
+
+    Sizing the shortlist: the round-12 recall frontier (SCALE.md)
+    measured quantized-tier recall as SHORTLIST-bound, not probe-bound —
+    rerank 20 -> 50 roughly doubles PQ recall and adds ~50% to BQ, while
+    extra nprobe without a wider shortlist buys almost nothing. Deploy
+    quantized tiers at rerank=50 (the measured default;
+    sim_pq_topk_scan_r50 prices it); the cost is linear in |queries| x
+    rerank float-row reads, which stays negligible next to the code scan
+    at any corpus size."""
+    order = F.asc_nulls_last(score) if ascending else F.desc_nulls_last(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    short = (
+        cand.withColumn("_rn", F.row_number().over(w))
+        .where((F.col("_rn") <= rerank) & F.col(score).isNotNull())
+        .select("query_id", "neighbor_id")
+    )
+    return _exact_rerank(short, corpus, queries, k, id_col, vec_col)
 
 
 def quantized_topk(
@@ -949,15 +971,9 @@ def quantized_topk(
         joined.where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", int_dot.alias("qscore"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qscore"), F.asc("neighbor_id")
+    return _shortlist_rerank(
+        cand, "qscore", False, rerank, corpus, queries, k, id_col, vec_col
     )
-    short = (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= rerank)
-        .select("query_id", "neighbor_id", "qscore")
-    )
-    return _exact_rerank(short, corpus, queries, k, id_col, vec_col)
 
 
 def bq_code(vec_col: str, dims: int = DIMS) -> Column:
@@ -1018,22 +1034,32 @@ def bq_topk(
     code = bq_code(vec_col, dims)
     qq = queries.select(F.col(id_col).alias("query_id"), code.alias("qcode"))
     cc = corpus.select(F.col(id_col).alias("neighbor_id"), code.alias("ccode"))
-    cand = (
-        cc.crossJoin(F.broadcast(qq))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.bit_count(F.col("qcode").bitwiseXOR(F.col("ccode"))).alias("_ham"),
-        )
+    cand = cc.crossJoin(F.broadcast(qq)).where(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("_ham"), F.asc("neighbor_id"))
-    short = (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= rerank)
-        .select("query_id", "neighbor_id")
+    return _hamming_rerank(cand, rerank, corpus, queries, k, id_col, vec_col)
+
+
+def _hamming_rerank(
+    pairs: DataFrame,
+    rerank: int,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Score (query_id, qcode) x (neighbor_id, ccode) pairs by Hamming
+    distance bit_count(qcode XOR ccode) and shortlist the ``rerank``
+    lowest (_shortlist_rerank) — the candidate stage of both BQ scans."""
+    cand = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.bit_count(F.col("qcode").bitwiseXOR(F.col("ccode"))).alias("_ham"),
     )
-    return _exact_rerank(short, corpus, queries, k, id_col, vec_col)
+    return _shortlist_rerank(
+        cand, "_ham", True, rerank, corpus, queries, k, id_col, vec_col
+    )
 
 
 def negative_mine_topk(
@@ -1060,24 +1086,10 @@ def negative_mine_topk(
     At larger query sets, swap to the multi-probe form: equi-join on
     each of the query's non-own buckets."""
     signs = hyperplane_signs(nbits, seed=seed)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), signs).alias("qb"),
-        )
-    )
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        project_udf(signs)(F.col(vec_col)).alias("_p"),
-    ).select(
-        "neighbor_id",
-        "cv",
-        F.col("_p.nrm").alias("cn"),
-        bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
-    )
+    q = F.broadcast(_query_side(
+        queries, id_col, vec_col, bucket_expr(F.col(vec_col), signs).alias("qb")
+    ))
+    c = _lsh_corpus_side(emb, signs, id_col, vec_col)
     scored = q.join(
         c, (q["qb"] != c["cb"]) & (q["query_id"] != c["neighbor_id"])
     ).select(
@@ -1377,14 +1389,9 @@ def mmr_topk(
     from hadoop_1_spark.operators.caching import persist_tracked
 
     signs = hyperplane_signs(nbits, seed=seed)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), signs).alias("qb"),
-        )
-    )
+    q = F.broadcast(_query_side(
+        queries, id_col, vec_col, bucket_expr(F.col(vec_col), signs).alias("qb")
+    ))
     c = emb.select(
         F.col(id_col).alias("cid"),
         F.col(vec_col).alias("cv"),
@@ -1878,15 +1885,57 @@ def _pq_adc_scan(
     cand = cand.select(
         "query_id", F.col(id_col).alias("neighbor_id"), adist.alias("_adist")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("_adist"), F.asc("neighbor_id")
+    return _shortlist_rerank(
+        cand, "_adist", True, rerank, corpus, queries, k, id_col, vec_col
     )
-    short = (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= rerank)
-        .select("query_id", "neighbor_id")
+
+
+_CENTROIDS = "cid int, cvec array<double>"
+
+
+def _centroid_rows(
+    cvals: list[list[float]], cids: list[int]
+) -> list[tuple[int, list[float]]]:
+    """(cid, cvec) rows of one trained centroid set — the coarse IVF
+    model, or one PQ subspace codebook. createDataFrame ships the
+    doubles as values (no parsing), so the rows are bit-exact."""
+    return [(int(c), [float(x) for x in v]) for c, v in zip(cids, cvals)]
+
+
+def _park_model(
+    spark, path: str, name: str, rows: list, schema: str = _CENTROIDS
+) -> None:
+    """Write one small model relation as one parquet file at
+    ``{path}/{name}`` — the offline half of a parked index."""
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/{name}"
     )
-    return _exact_rerank(short, corpus, queries, k, id_col, vec_col)
+
+
+def _park_codebooks(
+    spark, path: str, books: list[tuple[list[list[float]], list[int]]]
+) -> None:
+    """The m PQ codebooks as (sub, cid, cvec) rows at ``{path}/codebooks``
+    (read back by _load_codebooks)."""
+    rows = [
+        (s, *r)
+        for s, (cvals, cids) in enumerate(books)
+        for r in _centroid_rows(cvals, cids)
+    ]
+    _park_model(spark, path, "codebooks", rows, f"sub int, {_CENTROIDS}")
+
+
+def _load_codebooks(
+    spark, path: str, m: int
+) -> list[tuple[list[list[float]], list[int]]]:
+    """The parked m x kcb codebook rows as pq_codes' [(cvals, cids), ...]
+    — a bounded driver collect: the codebook IS the broadcastable model."""
+    cb = spark.read.parquet(f"{path}/codebooks").collect()
+    books = []
+    for s in range(m):
+        sub_rows = sorted((r["cid"], list(r["cvec"])) for r in cb if r["sub"] == s)
+        books.append(([v for _, v in sub_rows], [c for c, _ in sub_rows]))
+    return books
 
 
 def pq_park(
@@ -1918,15 +1967,7 @@ def pq_park(
         vec_col=vec_col,
         return_centroids=True,
     )
-    spark = corpus.sparkSession
-    rows = [
-        (s, int(c), [float(x) for x in v])
-        for s, (cvals, cids) in enumerate(books)
-        for c, v in zip(cids, cvals)
-    ]
-    spark.createDataFrame(
-        rows, "sub int, cid int, cvec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _park_codebooks(corpus.sparkSession, path, books)
     codes.write.mode("overwrite").parquet(f"{path}/codes")
 
 
@@ -1952,21 +1993,11 @@ def pq_adc_topk_scan(
     Shape at 100 TB: the scan reads m ints per corpus vector from
     parquet (column-pruned), LUTs are broadcast; corpus floats are
     touched only by the <= |queries| * rerank survivors. ``rerank`` is
-    the recall knob for this tier — deploy at 50, the measured default
-    from the round-12 frontier (SCALE.md: shortlist-bound recall;
-    rerank 20 -> 50 ~doubles PQ recall for 2.5x survivor float reads),
-    priced by the sim_pq_topk_scan_r50 bench row."""
+    the recall knob for this tier (sizing: _shortlist_rerank)."""
     spark = corpus.sparkSession
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
-    books: list[tuple[list[list[float]], list[int]]] = []
-    for s in range(m):
-        sub_rows = sorted(
-            ((r["cid"], list(r["cvec"])) for r in cb if r["sub"] == s)
-        )
-        books.append(([v for _, v in sub_rows], [c for c, _ in sub_rows]))
-    codes = spark.read.parquet(f"{path}/codes")
     return _pq_adc_scan(
-        codes, books, corpus, queries, k, rerank, m, subdim, id_col, vec_col
+        spark.read.parquet(f"{path}/codes"), _load_codebooks(spark, path, m),
+        corpus, queries, k, rerank, m, subdim, id_col, vec_col,
     )
 
 
@@ -2039,14 +2070,11 @@ def ivf_pq_park(
         return_centroids=True,
     )
     spark = corpus.sparkSession
+    cents = _centroid_rows(cvals, cids)
     pq_src = corpus
     if by_residual:
-        cent_df = spark.createDataFrame(
-            [(int(c), [float(x) for x in v]) for c, v in zip(cids, cvals)],
-            "cid int, cvec array<double>",
-        )
         pq_src = residual_relation(
-            corpus, assigned, cent_df, id_col, vec_col
+            corpus, assigned, spark.createDataFrame(cents, _CENTROIDS), id_col, vec_col
         ).select(id_col, vec_col)
     codes, books = pq_codes(
         pq_src,
@@ -2058,18 +2086,8 @@ def ivf_pq_park(
         vec_col=vec_col,
         return_centroids=True,
     )
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in zip(cids, cvals)],
-        "cid int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    rows = [
-        (s, int(c), [float(x) for x in v])
-        for s, (bvals, bids) in enumerate(books)
-        for c, v in zip(bids, bvals)
-    ]
-    spark.createDataFrame(
-        rows, "sub int, cid int, cvec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _park_model(spark, path, "centroids", cents)
+    _park_codebooks(spark, path, books)
     (
         codes.join(assigned.withColumnRenamed("cluster", "cell"), id_col)
         .write.partitionBy("cell")
@@ -2099,7 +2117,8 @@ def ivf_pq_topk_scan(
     ONLY the probed cells' PQ codes (dynamic partition pruning on the
     broadcast cell join), sum m LUT lookups per candidate, cut the
     shortlist, and exact-rerank the <= |queries| x rerank survivors
-    against corpus floats.
+    against corpus floats (_shortlist_rerank — size ``rerank`` before
+    nprobe; nprobe alone buys PQ almost nothing).
 
     Scale shape at 100 TB: the heavy relation touched per probe is the
     probed cells' m-int codes — cell pruning divides the scan by
@@ -2108,60 +2127,22 @@ def ivf_pq_topk_scan(
     _pq_adc_scan's exact fragments, so scores are bit-identical to the
     flat PQ scan restricted to the same cells; ``nprobe`` > 1 widens the
     probe to each query's nprobe nearest cells (the IVF recall knob).
-    Size ``rerank`` BEFORE nprobe: the round-12 frontier (SCALE.md)
-    measured quantized-tier recall as shortlist-bound — rerank=50 is
-    the deployment default (nprobe alone buys PQ almost nothing).
 
     ``by_residual=True`` reads an index parked with the same flag: the
     LUT side switches to per-(query, probed-cell) tables over the query
     residual (see _pq_adc_scan) — everything else (DPP-pruned code read,
     ADC adds, shortlist, exact float rerank) is the same plan.
 
-    ``probe="join"`` uses the broadcast-join cell assignment
-    (ivf_probe_cells_join) — the any-k probe for auto-k
-    (isqrt(n)-cell) parked indexes, where unrolled per-centroid plan
-    literals stop being viable; the centroid model then enters the plan
-    only as the broadcast k-row relation, never collected."""
-    if probe not in ("unrolled", "join"):
-        raise ValueError(f"unknown probe {probe!r} (want 'unrolled' or 'join')")
+    ``probe`` picks the cell assignment (see _probe)."""
     spark = queries.sparkSession
-    cents_df = spark.read.parquet(f"{path}/centroids")
-    if probe == "join":
-        qcells = ivf_probe_cells_join(queries, cents_df, nprobe, id_col, vec_col)
-        residual_cents = cents_df if by_residual else None
-    else:
-        cents = sorted(
-            (int(r["cid"]), list(r["cvec"])) for r in cents_df.collect()
-        )
-        qcells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
-        residual_cents = None
-        if by_residual:
-            residual_cents = spark.createDataFrame(
-                [(c, v) for c, v in cents], "cid int, cvec array<double>"
-            )
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
-    books: list[tuple[list[list[float]], list[int]]] = []
-    for s in range(m):
-        sub_rows = sorted(
-            ((r["cid"], list(r["cvec"])) for r in cb if r["sub"] == s)
-        )
-        books.append(([v for _, v in sub_rows], [c for c, _ in sub_rows]))
+    qcells, cents = _probe(queries, path, nprobe, probe, id_col, vec_col)
     codes = spark.read.parquet(f"{path}/codes").withColumn(
         "cell", F.col("cell").cast("int")
     )
     return _pq_adc_scan(
-        codes,
-        books,
-        corpus,
-        queries,
-        k,
-        rerank,
-        m,
-        subdim,
-        id_col,
-        vec_col,
-        qcells=qcells,
-        residual_cents=residual_cents,
+        codes, _load_codebooks(spark, path, m), corpus, queries, k, rerank, m,
+        subdim, id_col, vec_col, qcells=qcells,
+        residual_cents=cents if by_residual else None,
     )
 
 
@@ -2203,11 +2184,7 @@ def ivf_park(
         keep_vector=True,
         return_centroids=True,
     )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in zip(cids, cvals)],
-        "cid int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _park_model(corpus.sparkSession, path, "centroids", _centroid_rows(cvals, cids))
     (
         assigned.withColumnRenamed("cluster", "cell")
         .write.partitionBy("cell")
@@ -2285,6 +2262,34 @@ def ivf_probe_cells_join(
     )
 
 
+def _probe(
+    queries: DataFrame,
+    path: str,
+    nprobe: int,
+    probe: str,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The probe of every parked IVF tier: read the k-row centroid model
+    at ``{path}/centroids`` and assign each query to its ``nprobe``
+    nearest cells. Returns ((query_id, qcell), the centroid relation).
+
+    ``probe="unrolled"`` collects the model (bounded driver read) and
+    inlines it as per-centroid plan literals (ivf_probe_cells);
+    ``probe="join"`` assigns via the broadcast-join probe
+    (ivf_probe_cells_join) — required for auto-k (isqrt(n)-cell) parked
+    indexes, where the unrolled form's k x dims plan constants stop
+    being viable; the model then enters the plan only as the broadcast
+    k-row relation, never collected."""
+    if probe not in ("unrolled", "join"):
+        raise ValueError(f"unknown probe {probe!r} (want 'unrolled' or 'join')")
+    cents = queries.sparkSession.read.parquet(f"{path}/centroids")
+    if probe == "join":
+        return ivf_probe_cells_join(queries, cents, nprobe, id_col, vec_col), cents
+    local = sorted((int(r["cid"]), list(r["cvec"])) for r in cents.collect())
+    return ivf_probe_cells(queries, local, nprobe, id_col, vec_col), cents
+
+
 def ivf_topk_scan(
     queries: DataFrame,
     path: str,
@@ -2310,50 +2315,15 @@ def ivf_topk_scan(
     shrink probe cost exactly as ivf_topk's label-cell economics;
     ``nprobe`` > 1 scans each query's nprobe nearest cells — the
     standard IVF recall/latency knob (nprobe = k_cells degenerates to
-    the exact brute-force scan).
-
-    ``probe="join"`` assigns queries to cells via the broadcast-join
-    probe (ivf_probe_cells_join) instead of the unrolled per-centroid
-    literals — required for auto-k (isqrt(n)-cell) parked indexes where
-    the unrolled form's k x dims plan constants stop being viable."""
-    if probe not in ("unrolled", "join"):
-        raise ValueError(f"unknown probe {probe!r} (want 'unrolled' or 'join')")
-    spark = queries.sparkSession
-    if probe == "join":
-        cells = ivf_probe_cells_join(
-            queries,
-            spark.read.parquet(f"{path}/centroids"),
-            nprobe,
-            id_col,
-            vec_col,
-        )
-    else:
-        cents = sorted(
-            (int(r["cid"]), list(r["cvec"]))
-            for r in spark.read.parquet(f"{path}/centroids").collect()
-        )
-        cells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-        ).join(cells, "query_id")
+    the exact brute-force scan). ``probe`` picks the cell assignment
+    (see _probe)."""
+    cells, _ = _probe(queries, path, nprobe, probe, id_col, vec_col)
+    q = F.broadcast(_query_side(queries, id_col, vec_col).join(cells, "query_id"))
+    c = _corpus_side(
+        queries.sparkSession.read.parquet(f"{path}/cells"), id_col, vec_col,
+        NORM(F.col(vec_col)), F.col("cell").cast("int").alias("ccell"),
     )
-    c = spark.read.parquet(f"{path}/cells").select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        NORM(F.col(vec_col)).alias("cn"),
-        F.col("cell").cast("int").alias("ccell"),
-    )
-    scored = q.join(
-        c, (q["qcell"] == c["ccell"]) & (q["query_id"] != c["neighbor_id"])
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _cosine(q["qv"], c["cv"], q["qn"], c["cn"]).alias("cosine"),
-    )
-    return _topk(scored, k)
+    return _topk(_score(q, c, q["qcell"] == c["ccell"]), k)
 
 
 def bq_ivf_park(spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding", dims: int = DIMS) -> None:
@@ -2396,17 +2366,12 @@ def bq_ivf_topk_scan(
     index: load the k-row centroid model, assign each query to its
     ``nprobe`` nearest trained cells in-plan (ivf_probe_cells — the same
     argmin rule training used, so the oracle's kmeans CTEs replay it;
-    ``probe="join"`` swaps in ivf_probe_cells_join's broadcast-join
-    probe, required for auto-k isqrt(n)-cell parked indexes exactly as
-    in ivf_topk_scan / ivf_pq_topk_scan), scan ONLY the probed cells of
-    the parked binary tier
-    (``{path}/bqcodes``: one long per vector, written by bq_ivf_park) by
-    xor+popcount Hamming distance, shortlist the ``rerank`` lowest per
-    query (ties: hamming ASC, neighbor ASC), and rerank the survivors
-    under the exact cosine contract (_exact_rerank). Deploy this tier
-    at rerank=50: the round-12 frontier (SCALE.md) measured BQ recall
-    as shortlist-bound (+~50% recall from rerank 20 -> 50, nearly
-    nothing from extra nprobe at a fixed shortlist).
+    ``probe`` picks the cell assignment, see _probe), scan ONLY the
+    probed cells of the parked binary tier (``{path}/bqcodes``: one long
+    per vector, written by bq_ivf_park) by xor+popcount Hamming
+    distance, shortlist the ``rerank`` lowest per query (ties: hamming
+    ASC, neighbor ASC), and rerank the survivors under the exact cosine
+    contract (_shortlist_rerank).
 
     Scale shape at 100 TB — the missing rung between bq_topk (full
     binary scan) and the IVF-PQ tiers: queries broadcast; the bqcodes
@@ -2415,45 +2380,19 @@ def bq_ivf_topk_scan(
     cell directories; the pruned scan touches 8 bytes per candidate;
     floats are read only for <= |queries| x rerank rerank survivors.
     Candidate cost is sum(|probed cells|) longs, never |corpus|."""
-    if probe not in ("unrolled", "join"):
-        raise ValueError(f"unknown probe {probe!r} (want 'unrolled' or 'join')")
-    spark = queries.sparkSession
-    if probe == "join":
-        cells = ivf_probe_cells_join(
-            queries,
-            spark.read.parquet(f"{path}/centroids"),
-            nprobe,
-            id_col,
-            vec_col,
-        )
-    else:
-        cents = sorted(
-            (int(r["cid"]), list(r["cvec"]))
-            for r in spark.read.parquet(f"{path}/centroids").collect()
-        )
-        cells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
+    cells, _ = _probe(queries, path, nprobe, probe, id_col, vec_col)
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
             bq_code(vec_col, dims).alias("qcode"),
         ).join(cells, "query_id")
     )
-    c = spark.read.parquet(f"{path}/bqcodes").select(
+    c = queries.sparkSession.read.parquet(f"{path}/bqcodes").select(
         F.col(id_col).alias("neighbor_id"),
         F.col("code").alias("ccode"),
         F.col("cell").cast("int").alias("ccell"),
     )
-    cand = q.join(
+    pairs = q.join(
         c, (q["qcell"] == c["ccell"]) & (q["query_id"] != c["neighbor_id"])
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.bit_count(F.col("qcode").bitwiseXOR(F.col("ccode"))).alias("_ham"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("_ham"), F.asc("neighbor_id"))
-    short = (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(short, corpus, queries, k, id_col, vec_col)
+    return _hamming_rerank(pairs, rerank, corpus, queries, k, id_col, vec_col)

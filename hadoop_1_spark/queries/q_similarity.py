@@ -10,6 +10,10 @@ scores — must agree.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,6 +98,27 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_ann_topk(emb, emb.where("vec_id < 10"), k=K, nbits=NBITS)
 
 
+def _parked(sf_dir: str, namespace: str, params: str, **parts) -> str:
+    """Cache dir of a parked index, built on first use: keyed on the
+    embeddings file's identity (realpath + size + mtime) and the index
+    hyperparameters ``params``, under ``{tempdir}/{namespace}``. A new
+    test fixture or a parameter change auto-invalidates; a same-data
+    rerun (bench best-of-3, repeated driver rounds) reuses the trained
+    index. ``parts`` maps each artifact subdirectory, in build order, to
+    the ``park(path)`` call that writes it when its ``_SUCCESS`` marker
+    is missing."""
+    emb = os.path.join(sf_dir, "embeddings.parquet")
+    st = os.stat(emb)
+    key = hashlib.md5(
+        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:{params}".encode()
+    ).hexdigest()
+    path = os.path.join(tempfile.gettempdir(), namespace, key)
+    for part, park in parts.items():
+        if not os.path.exists(os.path.join(path, part, "_SUCCESS")):
+            park(path)
+    return path
+
+
 @register("sim_lsh_topk_scan", oracle=_lsh_oracle())
 def sim_lsh_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sim_lsh_topk against a PARKED signature layout: lsh_park computes
@@ -104,12 +129,11 @@ def sim_lsh_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a static corpus, same pattern as sim_ivf_topk_scan). Identical
     hyperplanes and fold order, so the oracle is sim_lsh_topk's
     verbatim. See similarity.lsh_park / similarity.lsh_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir, params=f"lsh:n{NBITS}:s42")
-    if not os.path.exists(os.path.join(path, "buckets", "_SUCCESS")):
-        similarity.lsh_park(emb, path, nbits=NBITS, seed=42)
+    path = _parked(
+        sf_dir, "hadoop_1_spark_ivf", f"lsh:n{NBITS}:s42",
+        buckets=lambda p: similarity.lsh_park(emb, p, nbits=NBITS, seed=42),
+    )
     return similarity.lsh_topk_scan(
         emb.where("vec_id < 10"), path, k=K, nbits=NBITS, seed=42
     )
@@ -1042,22 +1066,20 @@ p AS (
 """
 
 
-def _pq_park_dir(sf_dir: str) -> str:
-    """Cache dir for the parked PQ index, keyed on the embeddings file's
-    identity (realpath + size + mtime) and the PQ hyperparameters — a new
-    test fixture or a parameter change auto-invalidates; a same-data rerun
-    (bench best-of-3, repeated driver rounds) reuses the trained index."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_pq", key)
+def _pq_topk_scan(spark: SparkSession, sf_dir: str, rerank: int) -> DataFrame:
+    """The parked PQ index (one per data/params fingerprint, shared by
+    both scan rows) and its ADC scan at the given shortlist width."""
+    emb = _load(spark, sf_dir, "embeddings")
+    path = _parked(
+        sf_dir, "hadoop_1_spark_pq", f"m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}",
+        codes=lambda p: similarity.pq_park(
+            emb, p, m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS
+        ),
+    )
+    return similarity.pq_adc_topk_scan(
+        emb, emb.where("vec_id < 10"), path, k=K, rerank=rerank, m=PQ_M,
+        subdim=PQ_SUBDIM,
+    )
 
 
 @register("sim_pq_topk_scan", oracle=_pq_adc_oracle())
@@ -1071,23 +1093,7 @@ def sim_pq_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order folds, decimal-exact means), so the SQL-retrained
     codebooks are bit-identical to the parked ones and the scan must
     produce the same candidates. See similarity.pq_adc_topk_scan."""
-    import os
-
-    emb = _load(spark, sf_dir, "embeddings")
-    path = _pq_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.pq_park(
-            emb, path, m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS
-        )
-    return similarity.pq_adc_topk_scan(
-        emb,
-        emb.where("vec_id < 10"),
-        path,
-        k=K,
-        rerank=PQ_RERANK,
-        m=PQ_M,
-        subdim=PQ_SUBDIM,
-    )
+    return _pq_topk_scan(spark, sf_dir, PQ_RERANK)
 
 
 @register("sim_pq_topk_scan_r50", oracle=_pq_adc_oracle(rerank=50))
@@ -1101,23 +1107,7 @@ def sim_pq_topk_scan_r50(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank rows), nothing on the code scan. Shares the parked index
     with sim_pq_topk_scan (same data/params fingerprint); the oracle
     replays the wider shortlist cut exactly."""
-    import os
-
-    emb = _load(spark, sf_dir, "embeddings")
-    path = _pq_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.pq_park(
-            emb, path, m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS
-        )
-    return similarity.pq_adc_topk_scan(
-        emb,
-        emb.where("vec_id < 10"),
-        path,
-        k=K,
-        rerank=50,
-        m=PQ_M,
-        subdim=PQ_SUBDIM,
-    )
+    return _pq_topk_scan(spark, sf_dir, 50)
 
 
 @register("sim_pq_topk", oracle=_pq_adc_oracle())
@@ -1139,24 +1129,14 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_park_dir(sf_dir: str, params: str | None = None) -> str:
-    """Parked-IVF cache dir keyed on the embeddings file identity
-    (realpath + size + mtime) and the training hyperparameters — the
-    same fingerprint recipe as _pq_park_dir: a new fixture or parameter
-    change auto-invalidates, a same-data rerun reuses the trained index.
-    ``params`` overrides the hyperparameter tag (the auto-k twin parks
-    under its own key, never colliding with the fixture k=8 index)."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"{params or f'k{KM_K}:i{KM_ITERS}'}".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_ivf", key)
+def _ivf_index(sf_dir: str, emb: DataFrame, k_cells: int | None = KM_K, **more) -> str:
+    """The parked IVF index (k_cells=None: the auto-k isqrt(n) twin,
+    under its own key); ``more`` adds derived tiers (see _parked)."""
+    return _parked(
+        sf_dir, "hadoop_1_spark_ivf", f"k{k_cells or 'auto'}:i{KM_ITERS}",
+        cells=lambda p: similarity.ivf_park(emb, p, k_cells=k_cells, iters=KM_ITERS),
+        **more,
+    )
 
 
 # IVF over TRAINED cells: replay kmeans (afinal = vec_id -> cid), probe the
@@ -1188,13 +1168,10 @@ def sim_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds, fixed-order folds, decimal-exact means), so the parked
     assignment and the SQL-retrained one are identical.
     See similarity.ivf_park / similarity.ivf_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=KM_K, iters=KM_ITERS)
-    return similarity.ivf_topk_scan(emb.where("vec_id < 10"), path, k=K)
+    return similarity.ivf_topk_scan(
+        emb.where("vec_id < 10"), _ivf_index(sf_dir, emb), k=K
+    )
 
 
 def _ivf_pq_oracle(k: int | str = KM_K) -> str:
@@ -1254,21 +1231,26 @@ p AS (
     )
 
 
-def _ivf_pq_park_dir(sf_dir: str, kc: str | None = None) -> str:
-    """Parked IVF-PQ cache dir — the _pq_park_dir fingerprint recipe over
-    BOTH trainings' hyperparameters. ``kc`` overrides the coarse-cell
-    tag (the auto-k twin parks under kc=auto)."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"kc{kc or KM_K}:ci{KM_ITERS}:m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_ivfpq", key)
+def _ivf_pq_index(
+    sf_dir: str, emb: DataFrame, k_cells: int | None = KM_K, by_residual: bool = False
+) -> str:
+    """The parked IVF-PQ index, keyed on both trainings' hyperparameters
+    (k_cells=None: the auto-k twin). The by_residual index has its own
+    namespace — its codebooks are trained on a different relation."""
+    params = (
+        f"kc{k_cells or 'auto'}:ci{KM_ITERS}"
+        f":m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}"
+        + (":res" if by_residual else "")
+    )
+    return _parked(
+        sf_dir,
+        "hadoop_1_spark_ivfpqr" if by_residual else "hadoop_1_spark_ivfpq",
+        params,
+        codes=lambda p: similarity.ivf_pq_park(
+            emb, p, k_cells=k_cells, cell_iters=KM_ITERS, m=PQ_M,
+            subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS, by_residual=by_residual,
+        ),
+    )
 
 
 @register("sim_ivf_pq_topk_scan", oracle=_ivf_pq_oracle())
@@ -1281,29 +1263,10 @@ def sim_ivf_pq_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint; the oracle composes the kmeans-cell replay with the
     flat PQ scan oracle restricted to same-cell candidates. See
     similarity.ivf_pq_park / similarity.ivf_pq_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_pq_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.ivf_pq_park(
-            emb,
-            path,
-            k_cells=KM_K,
-            cell_iters=KM_ITERS,
-            m=PQ_M,
-            subdim=PQ_SUBDIM,
-            kcb=PQ_K,
-            iters=PQ_ITERS,
-        )
     return similarity.ivf_pq_topk_scan(
-        emb,
-        emb.where("vec_id < 10"),
-        path,
-        k=K,
-        rerank=PQ_RERANK,
-        m=PQ_M,
-        subdim=PQ_SUBDIM,
+        emb, emb.where("vec_id < 10"), _ivf_pq_index(sf_dir, emb), k=K,
+        rerank=PQ_RERANK, m=PQ_M, subdim=PQ_SUBDIM,
     )
 
 
@@ -1389,22 +1352,6 @@ p AS (
     )
 
 
-def _ivf_pq_res_park_dir(sf_dir: str) -> str:
-    """Parked by_residual IVF-PQ cache dir (own namespace — the codebooks
-    are trained on a different relation than the raw-vector index's)."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"kc{KM_K}:ci{KM_ITERS}:m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}:res".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_ivfpqr", key)
-
-
 @register("sim_ivf_pq_residual_topk_scan", oracle=_ivf_pq_residual_oracle())
 def sim_ivf_pq_residual_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """by_residual IVF-PQ top-5 against the PARKED index — the FAISS
@@ -1416,31 +1363,10 @@ def sim_ivf_pq_residual_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     shape is identical to sim_ivf_pq_topk_scan (DPP-pruned cell read, m
     LUT adds, exact float rerank). The oracle replays both trainings with
     PQ pointed at the residual CTE and LUTs keyed (query, cell)."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_pq_res_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.ivf_pq_park(
-            emb,
-            path,
-            k_cells=KM_K,
-            cell_iters=KM_ITERS,
-            m=PQ_M,
-            subdim=PQ_SUBDIM,
-            kcb=PQ_K,
-            iters=PQ_ITERS,
-            by_residual=True,
-        )
     return similarity.ivf_pq_topk_scan(
-        emb,
-        emb.where("vec_id < 10"),
-        path,
-        k=K,
-        rerank=PQ_RERANK,
-        m=PQ_M,
-        subdim=PQ_SUBDIM,
-        by_residual=True,
+        emb, emb.where("vec_id < 10"), _ivf_pq_index(sf_dir, emb, by_residual=True),
+        k=K, rerank=PQ_RERANK, m=PQ_M, subdim=PQ_SUBDIM, by_residual=True,
     )
 
 
@@ -1487,14 +1413,9 @@ def sim_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamic partition pruning still limiting the read to the probed cell
     directories. nprobe = k_cells would degenerate to the brute-force
     exact scan. See similarity.ivf_probe_cells."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=KM_K, iters=KM_ITERS)
     return similarity.ivf_topk_scan(
-        emb.where("vec_id < 10"), path, k=K, nprobe=IVF_NPROBE
+        emb.where("vec_id < 10"), _ivf_index(sf_dir, emb), k=K, nprobe=IVF_NPROBE
     )
 
 
@@ -1557,14 +1478,10 @@ def sim_bq_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranked under the exact cosine contract. Scan bytes per query:
     8 x sum(|probed cells|) — never the corpus, never floats.
     See similarity.bq_ivf_park / similarity.bq_ivf_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=KM_K, iters=KM_ITERS)
-    if not os.path.exists(os.path.join(path, "bqcodes", "_SUCCESS")):
-        similarity.bq_ivf_park(spark, path)
+    path = _ivf_index(
+        sf_dir, emb, bqcodes=lambda p: similarity.bq_ivf_park(spark, p)
+    )
     return similarity.bq_ivf_topk_scan(
         emb, emb.where("vec_id < 10"), path, k=K, rerank=RERANK,
         nprobe=IVF_NPROBE,
@@ -1599,14 +1516,10 @@ def sim_ivf_auto_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     training with the same isqrt(n) via a scalar-subquery LIMIT in the
     seeds CTE. See similarity.ivf_park (k_cells=None) /
     similarity.ivf_probe_cells_join."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir, params=f"kauto:i{KM_ITERS}")
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=None, iters=KM_ITERS)
     return similarity.ivf_topk_scan(
-        emb.where("vec_id < 10"), path, k=K, probe="join"
+        emb.where("vec_id < 10"), _ivf_index(sf_dir, emb, k_cells=None), k=K,
+        probe="join",
     )
 
 
@@ -1622,16 +1535,8 @@ def sim_ivf_pq_auto_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     swapped to the isqrt(n) scalar subquery. Together with
     sim_ivf_auto_topk_scan this closes the auto-k story for both parked
     tiers (floats and PQ codes)."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_pq_park_dir(sf_dir, kc="auto")
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.ivf_pq_park(
-            emb, path, k_cells=None, cell_iters=KM_ITERS,
-            m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS,
-        )
     return similarity.ivf_pq_topk_scan(
-        emb, emb.where("vec_id < 10"), path, k=K, rerank=PQ_RERANK,
-        m=PQ_M, subdim=PQ_SUBDIM, probe="join",
+        emb, emb.where("vec_id < 10"), _ivf_pq_index(sf_dir, emb, k_cells=None),
+        k=K, rerank=PQ_RERANK, m=PQ_M, subdim=PQ_SUBDIM, probe="join",
     )

@@ -9,7 +9,17 @@ from hadoop_1_spark.operators import similarity
 from tests.conftest import SF_DIR, assert_query_matches_oracle
 
 
-@pytest.mark.parametrize("name", ["sim_cosine_topk", "sim_lsh_topk", "sim_ivf_topk"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sim_cosine_topk",
+        "sim_lsh_topk",
+        "sim_ivf_topk",
+        "sim_quantized_topk",
+        "sim_ivf_quantized_topk",
+        "sim_pq_topk_scan_r50",
+    ],
+)
 def test_similarity_queries_match_oracle(spark, duck, name):
     assert_query_matches_oracle(spark, duck, name)
 
@@ -665,6 +675,30 @@ def test_pq_scan_matches_inline_training(spark, tmp_path):
     assert got == want
 
 
+def test_pq_scan_fails_closed_on_codes_missing_from_codebook(spark, tmp_path):
+    """Codes and codebooks out of step (stale parked codes against a
+    rewritten codebook) must DROP the unscoreable candidates, not rank
+    their NULL ADC distance first: keep one centroid for subspace 0 and
+    every returned neighbor must carry that centroid's subspace-0 code."""
+    from collections import Counter
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    path = str(tmp_path / "pq_index")
+    similarity.pq_park(emb, path, m=4, subdim=16, kcb=16, iters=1)
+    c0 = {r["vec_id"]: r["c0"] for r in spark.read.parquet(f"{path}/codes").collect()}
+    kept = Counter(c0.values()).most_common(1)[0][0]
+    cb = spark.read.parquet(f"{path}/codebooks").collect()
+    spark.createDataFrame(
+        [r for r in cb if r["sub"] != 0 or r["cid"] == kept],
+        "sub int, cid int, cvec array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    got = similarity.pq_adc_topk_scan(
+        emb, emb.where("vec_id < 5"), path, k=3, rerank=10, m=4, subdim=16
+    ).collect()
+    assert got
+    assert [r for r in got if c0[r["neighbor_id"]] != kept] == []
+
+
 def test_sim_pq_topk_scan_matches_oracle(spark, duck):
     assert_query_matches_oracle(spark, duck, "sim_pq_topk_scan")
 
@@ -1127,3 +1161,45 @@ def test_unknown_probe_raises(spark, tmp_path):
         similarity.ivf_topk_scan(emb, path, probe="jion")
     with pytest.raises(ValueError, match="unknown probe"):
         similarity.bq_ivf_topk_scan(emb, emb, path, probe="jion")
+    with pytest.raises(ValueError, match="unknown probe"):
+        similarity.ivf_pq_topk_scan(emb, emb, path, probe="jion")
+
+
+@pytest.fixture(scope="module")
+def parked(spark, tmp_path_factory):
+    """One small parked index per partitioned tier (LSH buckets, IVF
+    cells + their binary tier, IVF-PQ codes)."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    root = tmp_path_factory.mktemp("parked")
+    paths = {t: str(root / t) for t in ("lsh", "ivf", "ivfpq")}
+    similarity.lsh_park(emb, paths["lsh"], nbits=4)
+    similarity.ivf_park(emb, paths["ivf"], k_cells=4, iters=1)
+    similarity.bq_ivf_park(spark, paths["ivf"])
+    similarity.ivf_pq_park(
+        emb, paths["ivfpq"], k_cells=4, cell_iters=1, m=4, subdim=16, kcb=8, iters=1
+    )
+    return emb, paths
+
+
+_PARTITIONED_SCANS = {
+    "lsh_topk_scan": lambda emb, q, p: similarity.lsh_topk_scan(q, p["lsh"], k=3),
+    "ivf_topk_scan": lambda emb, q, p: similarity.ivf_topk_scan(q, p["ivf"], k=3),
+    "bq_ivf_topk_scan": lambda emb, q, p: similarity.bq_ivf_topk_scan(
+        emb, q, p["ivf"], k=3, rerank=10
+    ),
+    "ivf_pq_topk_scan": lambda emb, q, p: similarity.ivf_pq_topk_scan(
+        emb, q, p["ivfpq"], k=3, rerank=10, m=4, subdim=16
+    ),
+}
+
+
+@pytest.mark.parametrize("scan", sorted(_PARTITIONED_SCANS))
+def test_partitioned_scan_prunes_dynamically(spark, parked, scan):
+    """Every partitioned parked tier joins the broadcast query side on
+    its partition column, so dynamic partition pruning limits the read
+    to the probed bucket/cell directories."""
+    emb, paths = parked
+    df = _PARTITIONED_SCANS[scan](emb, emb.where("vec_id < 5"), paths)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruning" in plan.lower()
