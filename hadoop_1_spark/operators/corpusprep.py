@@ -174,20 +174,8 @@ def decontaminate_fuzzy(
         .select(F.col(id_col), "bench_id")
         .distinct()
     )
-    sets_c = pd_c.select(F.col(id_col), F.col("hs").alias("_hs1"))
-    sets_b = pd_b.select(F.col(id_col).alias("bench_id"), F.col("hs").alias("_hs2"))
-    pairs = (
-        cand.join(sets_c, id_col)
-        .join(F.broadcast(sets_b), "bench_id")
-        .withColumn("_i", F.size(F.array_intersect("_hs1", "_hs2")))
-        .select(
-            F.col(id_col),
-            "bench_id",
-            (
-                F.col("_i").cast("double")
-                / (F.size("_hs1") + F.size("_hs2") - F.col("_i"))
-            ).alias("jaccard"),
-        )
+    pairs = dedup._hash_set_jaccard(
+        cand, pd_c, F.broadcast(pd_b), id_col, "bench_id", id_col
     )
     return pairs.where(F.col("jaccard") >= threshold)
 

@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import textops
+from hadoop_1_spark.operators import dedup_autocap, textops
 from hadoop_1_spark.operators.textops import shingle_hash
 
 # SimHash banding: 60-bit hash split into 4 bands of 15 bits. By pigeonhole,
@@ -68,11 +68,53 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _pair_jaccard(sh: DataFrame, id_col: str) -> DataFrame:
-    """Exact Jaccard for every doc pair sharing >=1 shingle: self-join on the
-    shingle key, count intersections, divide by union of set sizes."""
+def _drop_hot_keys(rel: DataFrame, key: str, cap: int | str | None) -> DataFrame:
+    """The hot-key skew guard every self-joining pair operator shares:
+    drop the ``key`` values carried by more than ``cap`` rows of ``rel``
+    BEFORE the self-join (a key on B rows emits O(B^2) join rows, so one
+    stopword shingle, boilerplate band or shared fingerprint can dominate
+    the whole join at scale). ``cap`` is None (no guard), a non-negative
+    int (static cap), or ``"auto"``: the cap is derived in-plan from the
+    key counts by ``dedup_autocap.two_level_cap`` (max(8, min(4 x
+    lower-median count, work-budget cap)) — no knob to tune on a
+    degenerate vocabulary). Any other value raises ValueError: a
+    mistyped cap must not silently compare against the counts.
+
+    The over-cap key set is small by construction, so the drop is one
+    BROADCAST left-anti join — it never shuffles ``rel``. ``rel`` is
+    pinned first: the counts and the anti-join both read it, and without
+    the pin the guard re-runs its full lineage (tokenize + shingle,
+    signature explode). Spark's CacheManager matches canonicalized
+    plans, so an uncapped call over the same relation in the same
+    session shares the cache entry. Under "auto" the counts are pinned
+    too (the cap histogram and the hot-key filter both read them)."""
+    if cap is None:
+        return rel
+    if cap != "auto" and (
+        isinstance(cap, bool) or not isinstance(cap, int) or cap < 0
+    ):
+        raise ValueError(
+            f"cap must be None, a non-negative int or 'auto', got {cap!r}"
+        )
+    rel = _persist(rel)
+    counts = rel.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
+    if cap == "auto":
+        counts = _persist(counts)
+        hot = counts.crossJoin(
+            F.broadcast(dedup_autocap.two_level_cap(counts, "_n"))
+        ).where(F.col("_n") > F.col("_cap"))
+    else:
+        hot = counts.where(F.col("_n") > cap)
+    return rel.join(F.broadcast(hot.select(key)), key, "left_anti")
+
+
+def _shingle_overlap(sh: DataFrame, id_col: str) -> DataFrame:
+    """(d1, d2, c, n1, n2) for every doc pair (d1 < d2) sharing >= 1
+    shingle: self-join on the shingle key, count intersections c, join
+    both set sizes back by id. Shared by the Jaccard and containment
+    statistics, which differ only in how they divide c."""
     # Four references below (both self-join sides + two size probes):
-    # materialize the shingle relation once (see minhash_lsh_pairs).
+    # materialize the shingle relation once (see minhash_signature_relation).
     sh = _persist(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     a = sh.select(F.col(id_col).alias("d1"), "shingle")
@@ -83,15 +125,36 @@ def _pair_jaccard(sh: DataFrame, id_col: str) -> DataFrame:
         .groupBy("d1", "d2")
         .agg(F.count("*").alias("c"))
     )
+    return inter.join(
+        sizes.select(F.col(id_col).alias("d1"), F.col("n").alias("n1")), "d1"
+    ).join(sizes.select(F.col(id_col).alias("d2"), F.col("n").alias("n2")), "d2")
+
+
+def _hash_set_jaccard(
+    cand: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    a: str,
+    b: str,
+    id_col: str,
+) -> DataFrame:
+    """The MinHash verify leg: (a, b, jaccard) for every candidate pair in
+    ``cand`` (columns a, b), exact Jaccard over the 60-bit shingle-hash
+    sets (``hs``) of two signature relations — sets_a keyed by a, sets_b
+    by b (collision odds ~|S|^2/2^61). Verify work is O(|candidates| x
+    shingles/doc), the LSH-scale path — never an all-pairs join. A caller
+    whose b side is small passes it wrapped in F.broadcast."""
     return (
-        inter.join(sizes.select(F.col(id_col).alias("d1"), F.col("n").alias("n1")), "d1")
-        .join(sizes.select(F.col(id_col).alias("d2"), F.col("n").alias("n2")), "d2")
+        cand.join(sets_a.select(F.col(id_col).alias(a), F.col("hs").alias("hs1")), a)
+        .join(sets_b.select(F.col(id_col).alias(b), F.col("hs").alias("hs2")), b)
+        .withColumn("i", F.size(F.array_intersect("hs1", "hs2")))
         .select(
-            "d1",
-            "d2",
-            (F.col("c").cast("double") / (F.col("n1") + F.col("n2") - F.col("c"))).alias(
-                "jaccard"
-            ),
+            a,
+            b,
+            (
+                F.col("i").cast("double")
+                / (F.size("hs1") + F.size("hs2") - F.col("i"))
+            ).alias("jaccard"),
         )
     )
 
@@ -102,18 +165,24 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    df_cap: int | None = None,
+    df_cap: int | str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (jaccard >= threshold).
 
     df_cap (document-frequency cap) drops shingles appearing in more than
     df_cap docs before the self-join — the skew guard for web-scale corpora
-    (a shingle in 1M docs would emit 10^12 join rows)."""
+    (a shingle in 1M docs would emit 10^12 join rows). ``df_cap="auto"``
+    derives the cap from the measured shingle-DF distribution (see
+    _drop_hot_keys). Jaccard is then over the CAPPED shingle sets."""
     sh = textops.shingles(df, k=k, text_col=text_col, id_col=id_col)
-    if df_cap is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        sh = sh.join(F.broadcast(freq.where(F.col("df") > df_cap)), "shingle", "left_anti")
-    return _pair_jaccard(sh, id_col).where(F.col("jaccard") >= threshold)
+    pairs = _shingle_overlap(_drop_hot_keys(sh, "shingle", df_cap), id_col)
+    return pairs.select(
+        "d1",
+        "d2",
+        (F.col("c").cast("double") / (F.col("n1") + F.col("n2") - F.col("c"))).alias(
+            "jaccard"
+        ),
+    ).where(F.col("jaccard") >= threshold)
 
 
 def minhash_signature_relation(
@@ -235,7 +304,7 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    band_cap: int | None = None,
+    band_cap: int | str | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup: signature (num_hashes mins) -> band keys
     (md5 of each band's slice) -> docs sharing a band become candidates ->
@@ -253,17 +322,16 @@ def minhash_lsh_pairs(
     self-join; a pair is lost only if NO other sub-cap band covers it —
     near-identical docs agree on most of their bands, so the planted-pair
     recall cost is tiny while the worst-case join cost becomes
-    O(bands * cap * n)."""
+    O(bands * cap * n). ``band_cap="auto"`` derives the cap from the
+    measured band-occupancy distribution (see _drop_hot_keys and
+    dedup_autocap): on a healthy corpus band keys are near-unique, the
+    derived cap is the floor of 8, and the result is bit-identical to the
+    uncapped operator."""
     per_doc, banded = minhash_signature_relation(
         df, k=k, num_hashes=num_hashes, bands=bands,
         text_col=text_col, id_col=id_col,
     )
-    if band_cap is not None:
-        counts = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bc"))
-        banded = (
-            banded.join(counts.where(F.col("_bc") <= band_cap), "band_key")
-            .drop("_bc")
-        )
+    banded = _drop_hot_keys(banded, "band_key", band_cap)
     cand = (
         banded.alias("x")
         .join(banded.alias("y"), "band_key")
@@ -271,23 +339,7 @@ def minhash_lsh_pairs(
         .select(F.col(f"x.{id_col}").alias("d1"), F.col(f"y.{id_col}").alias("d2"))
         .distinct()
     )
-    # exact Jaccard over the 60-bit hash sets (collision odds ~|S|^2/2^61):
-    # verify work is O(|candidates| x shingles/doc), the LSH-scale path —
-    # never an all-pairs join.
-    sets_ = per_doc.select(F.col(id_col), "hs")
-    pairs = (
-        cand.join(sets_.select(F.col(id_col).alias("d1"), F.col("hs").alias("hs1")), "d1")
-        .join(sets_.select(F.col(id_col).alias("d2"), F.col("hs").alias("hs2")), "d2")
-        .withColumn("i", F.size(F.array_intersect("hs1", "hs2")))
-        .select(
-            "d1",
-            "d2",
-            (
-                F.col("i").cast("double")
-                / (F.size("hs1") + F.size("hs2") - F.col("i"))
-            ).alias("jaccard"),
-        )
-    )
+    pairs = _hash_set_jaccard(cand, per_doc, per_doc, "d1", "d2", id_col)
     return pairs.where(F.col("jaccard") >= threshold)
 
 
@@ -774,18 +826,8 @@ def incremental_dedup(
         .distinct()
     )
     near = (
-        cand.join(
-            pd_new.select(F.col(id_col).alias("_dn"), F.col("hs").alias("hs1")), "_dn"
-        )
-        .join(
-            pd_snap.select(F.col(id_col).alias("_ds"), F.col("hs").alias("hs2")), "_ds"
-        )
-        .withColumn("_i", F.size(F.array_intersect("hs1", "hs2")))
-        .where(
-            F.col("_i").cast("double")
-            / (F.size("hs1") + F.size("hs2") - F.col("_i"))
-            >= F.lit(threshold)
-        )
+        _hash_set_jaccard(cand, pd_new, pd_snap, "_dn", "_ds", id_col)
+        .where(F.col("jaccard") >= threshold)
         .select(F.col("_dn").alias(id_col))
         .distinct()
         .withColumn("_near", F.lit(1))
@@ -820,7 +862,7 @@ def winnow_overlap_pairs(
     min_shared: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fp_cap: int | None = None,
+    fp_cap: int | str | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs by shared winnowing fingerprints (the MOSS
     match step): docs sharing at least ``min_shared`` distinct selected
@@ -833,10 +875,7 @@ def winnow_overlap_pairs(
     fp = textops.winnow_fingerprints(
         df, k=k, w=w, text_col=text_col, id_col=id_col
     ).select(F.col(id_col), "fp").distinct()
-    fp = _persist(fp)
-    if fp_cap is not None:
-        counts = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("_c"))
-        fp = fp.join(counts.where(F.col("_c") <= fp_cap), "fp").drop("_c")
+    fp = _drop_hot_keys(_persist(fp), "fp", fp_cap)
     return (
         fp.alias("a")
         .join(fp.alias("b"), "fp")
@@ -1166,7 +1205,7 @@ def containment_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    df_cap: int | None = None,
+    df_cap: int | str | None = None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs: directed (src, dst, containment)
     with containment(src -> dst) = |S_src ∩ S_dst| / |S_src| >= threshold
@@ -1186,35 +1225,8 @@ def containment_pairs(
     sizes are over the capped shingle sets (the dedup_ngram_jaccard_capped
     convention — the statistic is containment of the rare-shingle
     profile, and the oracle replays it identically)."""
-    # Persist the BASE shingle relation before the cap branch: the DF
-    # guard's frequency pre-agg and the capped relation's anti-join both
-    # consume it, and without the pin the guard re-runs the full
-    # tokenize+shingle lineage (r11 verdict watch #3 — this constant was
-    # the most expensive sf0.1 bench row). Spark's CacheManager matches
-    # canonicalized plans, so an uncapped containment_pairs call in the
-    # same session shares this cache entry too.
-    sh = _persist(textops.shingles(df, k=k, text_col=text_col, id_col=id_col))
-    if df_cap is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        sh = _persist(
-            sh.join(
-                F.broadcast(freq.where(F.col("df") > df_cap)),
-                "shingle",
-                "left_anti",
-            )
-        )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
-    a = sh.select(F.col(id_col).alias("d1"), "shingle")
-    b = sh.select(F.col(id_col).alias("d2"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count("*").alias("c"))
-    )
-    both = inter.join(
-        sizes.select(F.col(id_col).alias("d1"), F.col("n").alias("n1")), "d1"
-    ).join(sizes.select(F.col(id_col).alias("d2"), F.col("n").alias("n2")), "d2")
+    sh = textops.shingles(df, k=k, text_col=text_col, id_col=id_col)
+    both = _shingle_overlap(_drop_hot_keys(sh, "shingle", df_cap), id_col)
     fwd = both.select(
         F.col("d1").alias("src"),
         F.col("d2").alias("dst"),

@@ -1,50 +1,56 @@
-"""Occupancy-guarded MinHash-LSH: derive the hot-band cap from the data.
+"""Occupancy-derived hot-key cap: the rule behind ``cap="auto"``.
 
-``dedup.minhash_lsh_pairs`` takes a static ``band_cap`` — the skew guard
-that bounds the O(B^2) candidate blowup a degenerate band (mass-produced
-boilerplate, empty-text minima, a 31-word vocabulary) causes at scale. The
-static knob has a failure mode: the operator is only safe if the caller
-knew the corpus was degenerate ahead of time. This module derives the cap
-from the measured band-occupancy distribution before the self-join, so the
-path degrades gracefully on degenerate vocabularies with no tuning:
+The self-joining near-dup operators in ``dedup`` (``minhash_lsh_pairs``
+band_cap, ``ngram_jaccard_pairs`` / ``containment_pairs`` df_cap,
+``winnow_overlap_pairs`` fp_cap) take a hot-key cap — the skew guard that
+bounds the O(B^2) candidate blowup a degenerate key (mass-produced
+boilerplate, empty-text minima, a 31-word vocabulary) causes at scale. A
+static cap has a failure mode: the operator is only safe if the caller
+knew the corpus was degenerate ahead of time. Passing ``"auto"`` derives
+the cap from the measured key-count distribution before the self-join
+(``dedup._drop_hot_keys``), so the path degrades gracefully on
+degenerate vocabularies with no tuning:
 
-    med  = lower-median band occupancy          (exact order statistic)
+    med  = lower-median key count               (exact order statistic)
     cap  = max(cap_floor, cap_factor * med)     (exact BIGINT arithmetic)
 
 Why the MEDIAN and not the mean: in the skewed regimes the cap exists for
-(mass boilerplate, a 31-word vocabulary) the hot bands carry most of the
+(mass boilerplate, a 31-word vocabulary) the hot keys carry most of the
 ROWS, so mean = total/distinct inflates with them and a mean-derived cap
 chases the offenders upward instead of cutting them. The median is over
-BANDS, not rows — a few giant bands cannot move it, so the cap stays
-O(typical band) and the giant bands (exactly the O(B^2) offenders) are
-dropped before the join. Worst-case join cost becomes
-O(bands * cap * n). A pair is lost only if NO surviving band covers it;
+KEYS, not rows — a few giant keys cannot move it, so the cap stays
+O(typical key) and the giant keys (exactly the O(B^2) offenders) are
+dropped before the join. Worst-case band join cost becomes
+O(bands * cap * n). A pair is lost only if NO surviving key covers it;
 near-identical docs agree on most bands, so planted-pair recall cost is
-tiny (the same trade the static cap documents at dedup.py:238-245). On a
-healthy corpus band keys are near-unique (median 1, sf0.01 max occupancy
-3), so cap = cap_floor drops nothing and the result is bit-identical to
-the uncapped operator. The one regime the MEDIAN rule cannot guard is a
-corpus that is MOSTLY duplicate clusters (the median itself is hot, so a
-median-relative cap admits the cliques) — round 12 closes it with the
-same work-budget level as the ngram twin (see ``work_budget_cap``):
+tiny (the same trade the static band_cap documents on
+``dedup.minhash_lsh_pairs``). On a healthy corpus band keys are
+near-unique (median 1, sf0.01 max occupancy 3), so cap = cap_floor drops
+nothing and the result is bit-identical to the uncapped operator. The
+one regime the MEDIAN rule cannot guard is a corpus that is MOSTLY
+duplicate clusters, or a fixed vocabulary under a growing corpus (the
+median itself is hot, so a median-relative cap admits the cliques) —
+round 12 closes it with a work-budget level (see ``work_budget_cap``):
 cap = max(floor, min(factor * median, work cap)), so admitted join work
-is O(work_factor * banded rows) by construction and the clique bands
+is O(work_factor * input rows) by construction and the clique keys
 abstain (those duplicates are exact_dedup's job, as always documented).
+``two_level_cap`` computes both levels in one plan; ``median_cap`` and
+``work_budget_cap`` are its composed reference form.
 
-Scale shape: the median is computed from the occupancy HISTOGRAM
-(occupancy value -> number of bands), never a global sort of the band
-counts. Distinct occupancy values d satisfy d(d+1)/2 <= total banded rows
-(each distinct size is carried by at least one band), so d <= sqrt(2*tot)
-— ~1.4M histogram rows at 10^12 banded rows — and the one ordered window
-over the histogram is bounded by that, not by the corpus. Everything is
-in-plan: the 1-row cap relation is broadcast into the filter (the repo's
-scalar-crossJoin pattern, e.g. pagerank's dangling mass) — no driver-side
+Scale shape: the median is computed from the count HISTOGRAM (count
+value -> number of keys), never a global sort of the key counts.
+Distinct count values d satisfy d(d+1)/2 <= total rows (each distinct
+size is carried by at least one key), so d <= sqrt(2*tot) — ~1.4M
+histogram rows at 10^12 rows — and the one ordered window over the
+histogram is bounded by that, not by the corpus. Everything is in-plan:
+the 1-row cap relation is broadcast into the filter (the repo's
+scalar-crossJoin pattern, e.g. pagerank's dangling mass) — no blocking
 collect.
 
 Reference basis: the band join itself mirrors the LSH candidate
-generation the static-cap operator builds (dedup.py:246-283); the
-reference's analog of a data-derived skew guard is the sampled partition
-histogram TeraSort builds before range-partitioning
+generation in ``dedup.minhash_lsh_pairs``; the reference's analog of a
+data-derived skew guard is the sampled partition histogram TeraSort
+builds before range-partitioning
 (examples/terasort/TeraInputFormat.java:130 sample-then-plan).
 """
 
@@ -52,9 +58,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from hadoop_1_spark.operators import dedup, textops
-from hadoop_1_spark.operators.caching import persist_tracked as _persist
 
 
 def median_cap(
@@ -197,135 +200,3 @@ def two_level_cap(
             ),
         ).alias("_cap")
     )
-
-
-def derived_band_cap(
-    banded: DataFrame, cap_floor: int = 8, cap_factor: int = 4
-) -> tuple[DataFrame, DataFrame]:
-    """(band counts, 1-row cap relation) for an LSH band relation."""
-    counts = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bc"))
-    return counts, median_cap(counts, "_bc", cap_floor, cap_factor)
-
-
-def minhash_lsh_pairs_autocap(
-    df: DataFrame,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cap_floor: int = 8,
-    cap_factor: int = 4,
-    work_factor: int = 16,
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs with the TWO-LEVEL occupancy-derived
-    band cap: max(cap_floor, min(cap_factor * lower-median occupancy,
-    work-budget cap)).
-
-    Identical to ``dedup.minhash_lsh_pairs`` except the hot-band guard is
-    derived from the data (see module docstring) instead of passed in.
-    Same signature relation, same band keys, same exact-Jaccard verify —
-    on a corpus whose max band occupancy is below the derived cap the
-    result is bit-identical to the uncapped operator.
-
-    The work level (``work_budget_cap``, round 12 — same rule as the
-    ngram twin) closes the one regime the module docstring previously
-    declared unguardable: a corpus that is MOSTLY duplicate clusters,
-    where the band-occupancy median itself is hot and a median-relative
-    cap admits the O(B^2) cliques. Under the work budget the admitted
-    band join is O(work_factor * banded rows) BY CONSTRUCTION — the
-    clique bands are dropped (those duplicates are exact_dedup's job,
-    as documented) while sparse planted-pair bands survive the
-    cap_floor."""
-    per_doc, banded = dedup.minhash_signature_relation(
-        df, k=k, num_hashes=num_hashes, bands=bands,
-        text_col=text_col, id_col=id_col,
-    )
-    # three consumers (occupancy counts + both self-join sides) — cache
-    # the tiny (id, band_key) relation so the signature agg runs once
-    banded = _persist(banded)
-    # counts feeds the median cap, the work cap, and the keep filter
-    counts = _persist(
-        banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bc"))
-    )
-    # r15: both cap levels from ONE histogram/window/aggregation (see
-    # two_level_cap) — bit-identical cap value, half the cap-side stages
-    cap = two_level_cap(counts, "_bc", cap_floor, cap_factor, work_factor)
-    ok_bands = (
-        counts.crossJoin(F.broadcast(cap))
-        .where(F.col("_bc") <= F.col("_cap"))
-        .select("band_key")
-    )
-    banded = banded.join(ok_bands, "band_key")
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), "band_key")
-        .where(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(F.col(f"x.{id_col}").alias("d1"), F.col(f"y.{id_col}").alias("d2"))
-        .distinct()
-    )
-    # verify leg identical to dedup.minhash_lsh_pairs:268-283 — exact
-    # Jaccard over the 60-bit shingle-hash sets, O(|candidates|) work.
-    sets_ = per_doc.select(F.col(id_col), "hs")
-    pairs = (
-        cand.join(sets_.select(F.col(id_col).alias("d1"), F.col("hs").alias("hs1")), "d1")
-        .join(sets_.select(F.col(id_col).alias("d2"), F.col("hs").alias("hs2")), "d2")
-        .withColumn("i", F.size(F.array_intersect("hs1", "hs2")))
-        .select(
-            "d1",
-            "d2",
-            (
-                F.col("i").cast("double")
-                / (F.size("hs1") + F.size("hs2") - F.col("i"))
-            ).alias("jaccard"),
-        )
-    )
-    return pairs.where(F.col("jaccard") >= threshold)
-
-
-def ngram_jaccard_pairs_autocap(
-    df: DataFrame,
-    k: int = 3,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cap_floor: int = 8,
-    cap_factor: int = 4,
-    work_factor: int = 16,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs with a TWO-LEVEL document-
-    frequency cap derived from the measured shingle-DF distribution:
-
-        cap = max(cap_floor, min(cap_factor * lower-median DF, work cap))
-
-    The median level (see module docstring) drops hot keys relative to
-    the typical shingle; the work level (``work_budget_cap``) bounds the
-    ADMITTED self-join rows to work_factor * |shingle rows| even when
-    the whole DF distribution shifts up together — the regime the
-    median cannot guard (a fixed vocabulary under a growing corpus
-    moves the median itself, so a median-relative cap chases the
-    offenders; round-11's worst gate row). On a healthy sparse corpus
-    the work cap sits at or above the max DF and the result is
-    bit-identical to the single-level cap (measured: sf0.01 and sf0.1
-    admit everything under both rules). Jaccard is over the CAPPED
-    shingle sets, same as ``dedup.ngram_jaccard_pairs(df_cap=...)``:
-    the hot-shingle drop is the over-cap set broadcast into a left-anti
-    join — small by construction, so the drop never shuffles the
-    shingle relation.
-    """
-    # three consumers of freq (median cap, work cap, hot set) and two of
-    # sh (DF counts + the capped relation _pair_jaccard then re-persists)
-    # — cache so the tokenize/explode runs once
-    sh = _persist(textops.shingles(df, k=k, text_col=text_col, id_col=id_col))
-    freq = _persist(sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df")))
-    # r15: both cap levels from ONE histogram/window/aggregation (see
-    # two_level_cap) — bit-identical cap value, half the cap-side stages
-    cap = two_level_cap(freq, "_df", cap_floor, cap_factor, work_factor)
-    hot = (
-        freq.crossJoin(F.broadcast(cap))
-        .where(F.col("_df") > F.col("_cap"))
-        .select("shingle")
-    )
-    sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    return dedup._pair_jaccard(sh, id_col).where(F.col("jaccard") >= threshold)

@@ -46,12 +46,6 @@ def md5_filter(df: DataFrame, key: str, frequency: int) -> DataFrame:
     return df.filter(md5_mod(F.col(key), frequency) == 0)
 
 
-def random_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """InputSampler.RandomSampler intent: Bernoulli sample (not oracle-
-    checkable row-for-row; used for partition-boundary estimation)."""
-    return df.sample(fraction=fraction, seed=seed)
-
-
 def universe_sample(df: DataFrame, key: Column, pct: int) -> DataFrame:
     """Universe (coherent entity-level) sampling: keep every row whose
     KEY hashes into the sampled pct% of the key universe — the BlinkDB/

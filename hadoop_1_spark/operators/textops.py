@@ -214,36 +214,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_base(col: Column) -> Column:
-    """Base hash for the permutation family: first 60 bits of md5 (same
-    digest hex_hash(col, 0) slices, so consumers computing both pay for one
-    md5), reduced mod P."""
-    return F.conv(hex_hash(col, 0), 16, 10).cast("long") % F.lit(MINHASH_P)
-
-
-def minhash_affine(base: Column, num_hashes: int) -> list[Column]:
-    """num_hashes permuted hashes of a base-hash column, as long Columns."""
-    return [
-        (F.lit(a) * base + F.lit(b)) % F.lit(MINHASH_P)
-        for a, b in minhash_coeffs(num_hashes)
-    ]
-
-
-def minhash_signature(
-    sh: DataFrame, num_hashes: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signature: per doc, min of permuted hash per permutation →
-    (id, sig array<long>). One groupBy shuffle on doc_id; signatures are
-    num_hashes longs regardless of doc size."""
-    perms = minhash_affine(minhash_base(F.col("shingle")), num_hashes)
-    aggs = [F.min(p).alias(f"h{i}") for i, p in enumerate(perms)]
-    return (
-        sh.groupBy(id_col)
-        .agg(*aggs)
-        .select(F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
-    )
-
-
 def simhash64(sh_tokens: DataFrame, id_col: str = "doc_id", term_col: str = "token") -> DataFrame:
     """60-bit SimHash over terms: per bit b, sum ±1 of bit b of each term
     hash; fingerprint bit b = 1 iff the sum > 0.

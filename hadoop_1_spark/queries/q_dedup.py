@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import dedup, dedup_autocap, linkage, textops
+from hadoop_1_spark.operators import dedup, linkage, textops
 from hadoop_1_spark.registry import _load, register
 
 _TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
@@ -97,22 +97,20 @@ jac AS (
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df_cap skew guard as a verified query: 3-gram Jaccard at 0.8
     over shingle sets with document frequency capped at DF_CAP (the
-    left-anti hot-shingle drop in dedup.ngram_jaccard_pairs:127-129)."""
+    broadcast left-anti hot-shingle drop in dedup._drop_hot_keys)."""
     return dedup.ngram_jaccard_pairs(
         _load(spark, sf_dir, "documents"), k=3, threshold=0.8, df_cap=DF_CAP
     )
 
 
-def _band_filter_ctes(band_cap: int | None, auto_cap: tuple[int, int] | None,
-                      work_factor: int = 16) -> str:
+def _band_filter_ctes(band_cap: int | None, auto_cap: tuple[int, int] | None) -> str:
     """The ``banded`` CTE (plus helpers) for the minhash oracle: uncapped,
     statically capped, or occupancy-auto-capped. The auto-cap rule is the
     TWO-LEVEL cap in exact integer arithmetic — lower-median via the
     cumulative histogram, work cap = largest occupancy whose cumulative
-    nbands*bc^2 stays within ``work_factor`` times the total banded rows —
-    replaying operators/dedup_autocap.median_cap + work_budget_cap to the
-    bit. ``work_factor`` MUST match the operator's work_factor argument
-    (both default 16) or the replay-to-the-bit contract breaks."""
+    nbands*bc^2 stays within 16 times the total banded rows — replaying
+    operators/dedup_autocap.median_cap + work_budget_cap to the bit, at
+    the work_factor 16 the operator's ``band_cap="auto"`` uses."""
     if auto_cap is not None:
         floor_, factor = auto_cap
         return f"""occ AS (SELECT count(*) AS bc FROM banded0 GROUP BY band_key),
@@ -122,7 +120,7 @@ cum AS (SELECT bc, sum(nbands) OVER (ORDER BY bc) AS cumb,
         FROM hist),
 nbt AS (SELECT sum(nbands) AS nb, sum(nbands::HUGEINT * bc) AS total_rows FROM hist),
 med AS (SELECT min(bc) AS m FROM cum, nbt WHERE cumb >= (nb + 1) // 2),
-wc AS (SELECT max(bc) AS w FROM cum, nbt WHERE cumj <= {work_factor} * total_rows),
+wc AS (SELECT max(bc) AS w FROM cum, nbt WHERE cumj <= 16 * total_rows),
 capv AS (SELECT greatest({floor_}, least({factor} * m, coalesce(w, 0))) AS cap FROM med, wc),
 banded AS (
   SELECT doc_id, band_key FROM banded0
@@ -140,11 +138,10 @@ banded AS (
 # TWO-LEVEL cap — max(floor, min(4 * lower-median DF, work-budget cap))
 # (replays operators/dedup_autocap.median_cap AND work_budget_cap to the
 # bit — exact integer histogram arithmetic; the work cap is the largest
-# df whose cumulative nkeys*df^2 stays within work_factor times the total
-# shingle rows; work_factor MUST match the operator argument, both
-# default 16), Jaccard over the capped sets.
-def _shingle_ctes_autocap(work_factor: int = 16) -> str:
-    return f"""
+# df whose cumulative nkeys*df^2 stays within 16 times the total shingle
+# rows, the work_factor the operator's df_cap="auto" uses),
+# Jaccard over the capped sets.
+_SHINGLE_CTES_AUTOCAP = f"""
 t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 sh_all AS (
   SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
@@ -157,7 +154,7 @@ fcum AS (SELECT df, sum(nkeys) OVER (ORDER BY df) AS cumb,
          FROM fhist),
 fnbt AS (SELECT sum(nkeys) AS nb, sum(nkeys::HUGEINT * df) AS total_rows FROM fhist),
 fmed AS (SELECT min(df) AS m FROM fcum, fnbt WHERE cumb >= (nb + 1) // 2),
-fwc AS (SELECT max(df) AS wc FROM fcum, fnbt WHERE cumj <= {work_factor} * total_rows),
+fwc AS (SELECT max(df) AS wc FROM fcum, fnbt WHERE cumj <= 16 * total_rows),
 fcapv AS (SELECT greatest(8, least(4 * m, coalesce(wc, 0))) AS cap FROM fmed, fwc),
 sh AS (
   SELECT s.doc_id, s.shingle
@@ -179,17 +176,17 @@ jac AS (
 
 @register(
     "dedup_ngram_autocap",
-    oracle=f"WITH {_shingle_ctes_autocap()} SELECT d1, d2, jaccard FROM jac WHERE jaccard >= 0.8",
+    oracle=f"WITH {_SHINGLE_CTES_AUTOCAP} SELECT d1, d2, jaccard FROM jac WHERE jaccard >= 0.8",
 )
 def dedup_ngram_autocap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df_cap auto-derived twin of dedup_ngram_jaccard_capped: shingle
-    document frequency capped at max(8, 4 * lower-median DF) measured from
-    the data (operators/dedup_autocap.ngram_jaccard_pairs_autocap) — no
-    static knob; the degenerate-vocabulary regime caps itself. The oracle
-    replays the histogram-median arithmetic and the capped-set Jaccard."""
-    return dedup_autocap.ngram_jaccard_pairs_autocap(
-        _load(spark, sf_dir, "documents"), k=3, threshold=0.8,
-        cap_floor=8, cap_factor=4,
+    document frequency capped at max(8, min(4 * lower-median DF, work
+    cap)) measured from the data (dedup.ngram_jaccard_pairs with
+    df_cap="auto", rule in operators/dedup_autocap.py) — no static knob;
+    the degenerate-vocabulary regime caps itself. The oracle replays the
+    histogram arithmetic and the capped-set Jaccard."""
+    return dedup.ngram_jaccard_pairs(
+        _load(spark, sf_dir, "documents"), k=3, threshold=0.8, df_cap="auto"
     )
 
 
@@ -199,7 +196,6 @@ def _minhash_oracle(
     band_cap: int | None = None,
     auto_cap: tuple[int, int] | None = None,
     bench_mod: int | None = None,
-    work_factor: int = 16,
 ) -> str:
     """``bench_mod`` switches the candidate stage to the DIRECTIONAL
     corpus-vs-benchmark form (benchmark = doc_id % bench_mod == 0) used
@@ -207,7 +203,8 @@ def _minhash_oracle(
     exact-Jaccard verify — only the pair universe changes."""
     rows = num_hashes // bands
     # affine permutations over one md5-derived base hash (matches
-    # textops.minhash_affine — same literal coefficients and modulus)
+    # dedup.minhash_signature_relation — same literal coefficients and
+    # modulus)
     from hadoop_1_spark.operators.textops import MINHASH_P, minhash_coeffs
 
     mins = ",\n    ".join(
@@ -233,7 +230,7 @@ mins AS (
   FROM hashed GROUP BY doc_id
 ),
 banded0 AS (SELECT doc_id, unnest([{band_keys}]) AS band_key FROM mins),
-{_band_filter_ctes(band_cap, auto_cap, work_factor)}
+{_band_filter_ctes(band_cap, auto_cap)}
 cand AS (
   {"SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2"
    " FROM banded x JOIN banded y ON x.band_key = y.band_key"
@@ -280,8 +277,9 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_minhash_autocap", oracle=_minhash_oracle(auto_cap=(8, 4)))
 def dedup_minhash_autocap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Occupancy-auto-capped MinHash-LSH (operators/dedup_autocap.py): the
-    hot-band cap is derived in-plan from the measured occupancy
+    """Occupancy-auto-capped MinHash-LSH (dedup.minhash_lsh_pairs with
+    band_cap="auto", rule in operators/dedup_autocap.py): the hot-band
+    cap is derived in-plan from the measured occupancy
     distribution — the TWO-LEVEL rule max(8, min(4 * lower-median
     occupancy, work-budget cap)), median over BANDS so hot bands cannot
     inflate their own cap, work cap bounding the admitted band join to
@@ -291,9 +289,9 @@ def dedup_minhash_autocap(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (max band occupancy 3 < floor 8) the result is bit-identical
     to dedup_minhash_lsh; the oracle replays the histogram arithmetic
     exactly."""
-    return dedup_autocap.minhash_lsh_pairs_autocap(
+    return dedup.minhash_lsh_pairs(
         _load(spark, sf_dir, "documents"), k=3, num_hashes=16, bands=8,
-        threshold=0.8, cap_floor=8, cap_factor=4,
+        threshold=0.8, band_cap="auto",
     )
 
 

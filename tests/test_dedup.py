@@ -19,10 +19,33 @@ from tests.conftest import SF_DIR, assert_query_matches_oracle
         "dedup_simhash",
         "dedup_embedding_cosine",
         "dedup_embedding_lsh",
+        "dedup_minhash_lsh_capped",
+        "dedup_ngram_jaccard_capped",
+        "dedup_incremental",
+        "dedup_winnow_overlap",
     ],
 )
 def test_dedup_queries_match_oracle(spark, duck, name):
     assert_query_matches_oracle(spark, duck, name)
+
+
+@pytest.mark.parametrize("bad", ["Auto", "20", -1, 2.5, True])
+@pytest.mark.parametrize(
+    "op, cap_kw",
+    [
+        (dedup.minhash_lsh_pairs, "band_cap"),
+        (dedup.ngram_jaccard_pairs, "df_cap"),
+        (dedup.containment_pairs, "df_cap"),
+        (dedup.winnow_overlap_pairs, "fp_cap"),
+    ],
+)
+def test_unknown_cap_raises(spark, op, cap_kw, bad):
+    """A hot-key cap is None, a non-negative int or "auto"; anything else
+    fails closed at plan-build time instead of being compared with the
+    key counts."""
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="cap"):
+        op(df, **{cap_kw: bad})
 
 
 def test_embedding_lsh_subset_of_brute_force(spark):

@@ -1,6 +1,7 @@
-"""Occupancy-auto-capped MinHash-LSH (operators/dedup_autocap.py):
-oracle match, bit-identity on a healthy corpus, graceful degradation on a
-degenerate one, and the exact median-cap arithmetic."""
+"""Occupancy-auto-capped near-dup operators (``cap="auto"``, rule in
+operators/dedup_autocap.py): oracle match, bit-identity on a healthy
+corpus, graceful degradation on a degenerate one, and the exact
+median-cap arithmetic."""
 
 from __future__ import annotations
 
@@ -26,7 +27,8 @@ def test_autocap_identity_on_healthy_corpus(spark):
     }
     auto = {
         (r.d1, r.d2, r.jaccard)
-        for r in dedup_autocap.minhash_lsh_pairs_autocap(docs, threshold=0.8).collect()
+        for r in dedup.minhash_lsh_pairs(
+            docs, threshold=0.8, band_cap="auto").collect()
     }
     assert auto == plain and plain
 
@@ -43,8 +45,8 @@ def test_autocap_drops_degenerate_band(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     uncapped = {(r.d1, r.d2) for r in dedup.minhash_lsh_pairs(df, threshold=0.8).collect()}
-    auto = {(r.d1, r.d2) for r in dedup_autocap.minhash_lsh_pairs_autocap(
-        df, threshold=0.8).collect()}
+    auto = {(r.d1, r.d2) for r in dedup.minhash_lsh_pairs(
+        df, threshold=0.8, band_cap="auto").collect()}
     assert len(uncapped) >= 435  # the 30-doc clique dominates uncapped
     assert auto == {(100, 101)}
     assert auto <= uncapped  # the cap can only lose pairs, never invent
@@ -59,8 +61,8 @@ def test_derived_cap_median_arithmetic(spark):
             (f"b{i}", j) for i, n in enumerate(occupancies) for j in range(n)
         ]
         banded = spark.createDataFrame(rows, "band_key string, doc_id long")
-        _, cap = dedup_autocap.derived_band_cap(banded)
-        return cap.collect()[0]["_cap"]
+        counts = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bc"))
+        return dedup_autocap.median_cap(counts, "_bc").collect()[0]["_cap"]
 
     # median 1 (3 of 5 bands at 1): cap = max(8, 4*1) = 8 — the hot band
     # at 9 cannot inflate its own cap
@@ -91,8 +93,8 @@ def test_band_work_cap_guards_mostly_duplicate_corpus(spark):
     near = " ".join(f"tok{i}" for i in range(24)) + " zz"
     rows += [(9000, base), (9001, near)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    auto = {(r.d1, r.d2) for r in dedup_autocap.minhash_lsh_pairs_autocap(
-        df, threshold=0.8).collect()}
+    auto = {(r.d1, r.d2) for r in dedup.minhash_lsh_pairs(
+        df, threshold=0.8, band_cap="auto").collect()}
     assert auto == {(9000, 9001)}
 
 
@@ -152,8 +154,8 @@ def test_ngram_autocap_work_cap_binds_on_dense_vocab(spark):
     assert expected_cap < max(counts)
     auto = {
         (r.d1, r.d2, round(r.jaccard, 12))
-        for r in dedup_autocap.ngram_jaccard_pairs_autocap(
-            df, k=3, threshold=0.8).collect()
+        for r in dedup.ngram_jaccard_pairs(
+            df, k=3, threshold=0.8, df_cap="auto").collect()
     }
     static = {
         (r.d1, r.d2, round(r.jaccard, 12))
@@ -178,8 +180,8 @@ def test_ngram_autocap_identity_on_distinct_vocab(spark):
     }
     auto = {
         (r.d1, r.d2, round(r.jaccard, 12))
-        for r in dedup_autocap.ngram_jaccard_pairs_autocap(
-            df, k=3, threshold=0.5).collect()
+        for r in dedup.ngram_jaccard_pairs(
+            df, k=3, threshold=0.5, df_cap="auto").collect()
     }
     assert auto == plain == {(1, 2, round(next(iter(plain))[2], 12))}
 
@@ -194,8 +196,8 @@ def test_ngram_autocap_drops_hot_shingles(spark):
     near = " ".join(f"tok{i}" for i in range(24)) + " zz"
     rows += [(100, base), (101, near)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    auto = {(r.d1, r.d2) for r in dedup_autocap.ngram_jaccard_pairs_autocap(
-        df, k=3, threshold=0.5).collect()}
+    auto = {(r.d1, r.d2) for r in dedup.ngram_jaccard_pairs(
+        df, k=3, threshold=0.5, df_cap="auto").collect()}
     assert (100, 101) in auto
     assert all(d1 >= 100 for d1, _ in auto)  # no boilerplate-clique pairs
 
@@ -203,12 +205,7 @@ def test_ngram_autocap_drops_hot_shingles(spark):
 def test_derived_cap_filter_keeps_only_sub_cap_bands(spark):
     rows = [(f"b{i}", j) for i, n in enumerate([1, 1, 1, 1, 1, 40]) for j in range(n)]
     banded = spark.createDataFrame(rows, "band_key string, doc_id long")
-    counts, cap = dedup_autocap.derived_band_cap(banded)
-    ok = (
-        counts.crossJoin(F.broadcast(cap))
-        .where(F.col("_bc") <= F.col("_cap"))
-        .select("band_key")
-    )
+    ok = dedup._drop_hot_keys(banded, "band_key", "auto")
     kept = {r.band_key for r in ok.collect()}
     assert kept == {"b0", "b1", "b2", "b3", "b4"}  # the 40-band dropped
 

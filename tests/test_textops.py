@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import textops
+from hadoop_1_spark.operators import dedup, textops
 from tests.conftest import assert_query_matches_oracle
 
 
@@ -35,8 +35,10 @@ def test_minhash_identical_docs_share_signature(spark):
         [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"), (3, "something else entirely here now")],
         "doc_id long, text string",
     )
-    sig = textops.minhash_signature(textops.shingles(df, k=2), num_hashes=8)
-    rows = {r["doc_id"]: tuple(r["sig"]) for r in sig.collect()}
+    sig, _ = dedup.minhash_signature_relation(df, k=2, num_hashes=8, bands=4)
+    rows = {
+        r["doc_id"]: tuple(r[f"h{i}"] for i in range(8)) for r in sig.collect()
+    }
     assert rows[1] == rows[2]
     assert rows[1] != rows[3]
 
